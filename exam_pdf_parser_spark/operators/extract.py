@@ -2,8 +2,9 @@
 
 Design (SURVEY.md §7.0, re-thought Spark-first): the reference's whole
 per-document loop (layout → detect → assemble; src/parser.py:34-77,
-src/cropper/detector.py:39-77) collapses into ONE ``mapInPandas`` over
-the ``documents`` table.  Documents are independent, so the core
+src/cropper/detector.py:39-77) collapses into ONE ``mapInArrow`` over
+the ``documents`` table, giant documents included.  Documents are
+independent, so the core
 extraction needs **no shuffle at all** — parallelism is across rows,
 Arrow-batched, and throughput scales linearly with cores/executors
 (the north rule's N→4N efficiency criterion).  Cross-document logic
@@ -59,39 +60,27 @@ EXTRACT_SCHEMA = StructType([
 ])
 
 
-def span_dicts(regions) -> list[dict]:
-    """Region list → SPAN_STRUCT dicts (shared by every extraction
-    variant so the span shape can never skew between paths)."""
-    return [
-        {
-            "question_number": r.question_number,
-            "page_idx": r.page_idx,
-            "x0": r.x0, "y0": r.y0, "x1": r.x1, "y1": r.y1,
-            "text_preview": r.text_preview,
-            "spans_page": r.spans_page,
-            "group_range": r.group_range,
-            "region_idx": r.region_idx,
-        }
-        for r in regions
-    ]
+# Whole-doc payloads run ~1,000 compressed bytes per page on the
+# corpus (measured over 50 docs), so this byte size is the header-cheap
+# page-count proxy: 100_000 B ≈ a 100-page document, ~20× the largest
+# ordinary doc.  The emitter gives a document above it an Arrow batch
+# of its own, so a worker never holds a giant next to a batch of
+# ordinary rows.
+GIANT_BYTES = 100_000
 
-
-def extract_one_row(url, html, min_q: int = 1, max_q: int = 50) -> dict:
-    """Single-document extraction row (EXTRACT_SCHEMA shape): the
-    per-doc body of :func:`extract`, shared with ``extract_auto``'s
-    router so the small-doc path is byte-identical by construction —
-    including the quarantine error string for corrupt/NULL payloads."""
-    try:
-        extracted, regions = extract_document(bytes(html), min_q, max_q)
-    except Exception as e:  # quarantine, never fail the task
-        return {"url": url, "extracted_text": None, "spans": [],
-                "status": "error", "error": f"{type(e).__name__}: {e}"[:500]}
-    return {"url": url, "extracted_text": extracted,
-            "spans": span_dicts(regions), "status": "ok", "error": None}
+# EXTRACT_SCHEMA + the shard coordinates (core/shard.py): emitted when
+# giant-output sharding is enabled so no single output row can exceed
+# task memory at the bucketed write
+SHARDED_EXTRACT_SCHEMA = StructType(
+    EXTRACT_SCHEMA.fields + [
+        StructField("shard_idx", IntegerType(), False),
+        StructField("n_shards", IntegerType(), False),
+    ])
 
 
 def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
-            with_timing: bool = False) -> DataFrame:
+            with_timing: bool = False, shard_chars: int | None = None,
+            shard_spans: int | None = None) -> DataFrame:
     """documents(url, …, html, …) → (url, extracted_text, spans, status, error).
 
     Catalyst prunes unused input columns before the UDF (only ``url``
@@ -107,17 +96,41 @@ def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
     processing time, measured inside the task) — the source of the
     manifest's per-partition throughput metrics.  Off by default so
     the byte-identity output contract stays timing-free.
+
+    ``shard_chars`` (opt-in): bound every OUTPUT row under the
+    ``core/shard.py`` rule — output gains ``(shard_idx, n_shards)`` and
+    a document whose text exceeds ``shard_chars`` chars or whose span
+    list exceeds ``shard_spans`` (default
+    ``core.shard.DEFAULT_SHARD_SPANS``) is emitted as several rows, so
+    the durable write never materializes one hundreds-of-MB row.  The
+    rule is applied to every document, not only to large payloads: a
+    small payload can still expand to a giant output (zlib bombs).
+    A sharded document's ``proc_us`` lands on shard 0 (0 on the rest),
+    so per-url sums stay its kernel time.  Byte identity holds under
+    ``operators.extract_paged.reassemble_sharded``.
+
+    Giant documents (payload above ``GIANT_BYTES``) are extracted in
+    place by the same kernel call: the emitter flushes its pending rows
+    first and emits the giant's rows as a batch of their own, so peak
+    worker memory stays O(one document).
     """
     import time
 
     import pyarrow as pa
 
+    from ..core.shard import DEFAULT_SHARD_SPANS, shard_count
+
     docs = documents.select("url", "html")
-    schema = EXTRACT_SCHEMA
+    sharding = shard_chars is not None
+    if sharding and shard_spans is None:
+        shard_spans = DEFAULT_SHARD_SPANS
+    schema = SHARDED_EXTRACT_SCHEMA if sharding else EXTRACT_SCHEMA
+    names = [f.name for f in schema.fields]
     if with_timing:
         from pyspark.sql.types import LongType
         schema = StructType(
-            EXTRACT_SCHEMA.fields + [StructField("proc_us", LongType())])
+            schema.fields + [StructField("proc_us", LongType())])
+        names.append("proc_us")
 
     # r10 (guide §4.2): the emitter builds the Arrow output DIRECTLY —
     # flat per-field lists + one offsets array assembled into the
@@ -133,67 +146,86 @@ def extract(documents: DataFrame, min_q: int = 1, max_q: int = 50,
         ("text_preview", pa.string()), ("spans_page", pa.bool_()),
         ("group_range", pa.string()), ("region_idx", pa.int32()),
     ])
+    span_types = [f.type for f in span_pa]
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for rb in batches:
-            urls = rb.column(0).to_pylist()
-            if not urls:     # empty batch → emit nothing (Arrow
-                continue     # list<struct> inference has no rows to see)
-            htmls = rb.column(1).to_pylist()
-            texts, status, errors, procs = [], [], [], []
-            offs = [0]
-            qn, pi = [], []
-            x0, y0, x1, y1 = [], [], [], []
-            tp, sp, gr, ri = [], [], [], []
-            n = 0
-            for html in htmls:
-                t0 = time.perf_counter_ns()
-                try:
-                    extracted, regions = extract_document(
-                        bytes(html), min_q, max_q)
-                except Exception as e:  # quarantine, never fail the task
-                    texts.append(None)
-                    status.append("error")
-                    errors.append(f"{type(e).__name__}: {e}"[:500])
-                    procs.append((time.perf_counter_ns() - t0) // 1000)
-                    offs.append(n)
-                    continue
-                texts.append(extracted)
-                status.append("ok")
-                errors.append(None)
-                for r in regions:
-                    qn.append(r.question_number)
-                    pi.append(r.page_idx)
-                    x0.append(r.x0)
-                    y0.append(r.y0)
-                    x1.append(r.x1)
-                    y1.append(r.y1)
-                    tp.append(r.text_preview)
-                    sp.append(r.spans_page)
-                    gr.append(r.group_range)
-                    ri.append(r.region_idx)
-                n += len(regions)
-                offs.append(n)
-                procs.append((time.perf_counter_ns() - t0) // 1000)
+        # one list per output column, then one list per span field
+        urls, texts, status, errors, sidx, nsh, procs = ([] for _ in range(7))
+        offs = [0]
+        fields = [[] for _ in span_types]
+
+        def add(url, text, regions, st, err, proc, i=0, n=1):
+            urls.append(url)
+            texts.append(text)
+            status.append(st)
+            errors.append(err)
+            sidx.append(i)
+            nsh.append(n)
+            procs.append(proc if i == 0 else 0)
+            for r in regions:
+                fields[0].append(r.question_number)
+                fields[1].append(r.page_idx)
+                fields[2].append(r.x0)
+                fields[3].append(r.y0)
+                fields[4].append(r.x1)
+                fields[5].append(r.y1)
+                fields[6].append(r.text_preview)
+                fields[7].append(r.spans_page)
+                fields[8].append(r.group_range)
+                fields[9].append(r.region_idx)
+            offs.append(offs[-1] + len(regions))
+
+        def flush() -> pa.RecordBatch:
             struct = pa.StructArray.from_arrays(
-                [pa.array(qn, pa.int32()), pa.array(pi, pa.int32()),
-                 pa.array(x0, pa.float64()), pa.array(y0, pa.float64()),
-                 pa.array(x1, pa.float64()), pa.array(y1, pa.float64()),
-                 pa.array(tp, pa.string()), pa.array(sp, pa.bool_()),
-                 pa.array(gr, pa.string()), pa.array(ri, pa.int32())],
+                [pa.array(f, t) for f, t in zip(fields, span_types)],
                 fields=list(span_pa))
-            spans = pa.ListArray.from_arrays(pa.array(offs, pa.int32()),
-                                             struct)
             cols = [pa.array(urls, pa.string()),
                     pa.array(texts, pa.string()),
-                    spans,
+                    pa.ListArray.from_arrays(pa.array(offs, pa.int32()),
+                                             struct),
                     pa.array(status, pa.string()),
                     pa.array(errors, pa.string())]
-            names = ["url", "extracted_text", "spans", "status", "error"]
+            if sharding:
+                cols += [pa.array(sidx, pa.int32()),
+                         pa.array(nsh, pa.int32())]
             if with_timing:
                 cols.append(pa.array(procs, pa.int64()))
-                names.append("proc_us")
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+            for col in (urls, texts, status, errors, sidx, nsh, procs,
+                        *fields):
+                col.clear()
+            del offs[1:]
+            return pa.RecordBatch.from_arrays(cols, names=names)
+
+        for rb in batches:
+            for url, html in zip(rb.column(0).to_pylist(),
+                                 rb.column(1).to_pylist()):
+                giant = html is not None and len(html) > GIANT_BYTES
+                if giant and urls:
+                    yield flush()
+                t0 = time.perf_counter_ns()
+                try:
+                    text, regions = extract_document(
+                        bytes(html), min_q, max_q)
+                except Exception as e:  # quarantine, never fail the task
+                    add(url, None, (), "error",
+                        f"{type(e).__name__}: {e}"[:500],
+                        (time.perf_counter_ns() - t0) // 1000)
+                else:
+                    proc = (time.perf_counter_ns() - t0) // 1000
+                    n = shard_count(len(text), len(regions), shard_chars,
+                                    shard_spans) if sharding else 1
+                    if n == 1:
+                        add(url, text, regions, "ok", None, proc)
+                    for i in range(n if n > 1 else 0):
+                        a, b = i * shard_chars, i * shard_spans
+                        add(url, text[a:a + shard_chars],
+                            regions[b:b + shard_spans], "ok", None, proc, i, n)
+                if giant:
+                    yield flush()
+            # one output batch per input batch: an empty input batch
+            # emits nothing (list<struct> inference has no rows to see)
+            if urls:
+                yield flush()
 
     return docs.mapInArrow(run, schema)
 

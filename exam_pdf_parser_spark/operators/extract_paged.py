@@ -17,10 +17,13 @@ page_idx) and calls the same shared ``detect_regions``/
 
 Cost: measured 3.6× slower than the whole-doc path at 120k ordinary
 docs (1,669 vs 6,038 docs/sec at local[16]) — the url shuffle plus the
-page JSON round-trip.  Route accordingly: whole-doc ``extract()`` for
-the bulk, this path only for documents above a page-count threshold
-(e.g. ``F.size`` on a page-index column, or input-source partitioning)
-where one row would otherwise stall a task.
+page JSON round-trip.  So it is only for input that already arrives
+paged: whole-document input, giants included, goes through
+``extract()``, which extracts each giant in place in one kernel call
+(the page split, shuffle and regroup would add a second serial stage
+and parallelize nothing, since detection is serial per url anyway).
+``explode_pages`` reshapes whole-doc input for this path (tests,
+benchmarks).
 """
 
 from __future__ import annotations
@@ -39,16 +42,9 @@ from ..core.assemble import (
 )
 from ..core.detector import detect_regions
 from ..core.shard import DEFAULT_SHARD_SPANS, shard_row
-from .extract import EXTRACT_SCHEMA
-
-# EXTRACT_SCHEMA + the shard coordinates (core/shard.py): emitted when
-# giant-output sharding is enabled so no single output row can exceed
-# task memory at the bucketed write
-SHARDED_EXTRACT_SCHEMA = StructType(
-    EXTRACT_SCHEMA.fields + [
-        StructField("shard_idx", IntegerType(), False),
-        StructField("n_shards", IntegerType(), False),
-    ])
+from .extract import (  # noqa: F401  (GIANT_BYTES: re-exported)
+    EXTRACT_SCHEMA, GIANT_BYTES, SHARDED_EXTRACT_SCHEMA, extract,
+)
 
 PAGED_SCHEMA = StructType([
     StructField("url", StringType(), False),
@@ -139,7 +135,7 @@ def extract_paged(paged: DataFrame, min_q: int = 1, max_q: int = 50,
             return pd.DataFrame(shard_row(row, shard_chars, shard_spans))
         return pd.DataFrame([row])
 
-    def detect(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def detect(key, pdf):
         # stage B: the url-keyed stateful scan over rebuilt pages.
         # Same quarantine contract as extract(): nothing a document
         # contains may fail the task.
@@ -283,14 +279,7 @@ def reassemble_sharded(df: DataFrame) -> DataFrame:
         F.when(ok, F.col("error")).otherwise(bad_err).alias("error"))
 
 
-# --- automatic giant-doc routing ---------------------------------------------
-
-# Whole-doc payloads run ~1,000 compressed bytes per page on the
-# corpus (measured over 50 docs), so the byte threshold IS the header-
-# cheap page-count proxy: 100_000 B ≈ a 100-page document, ~20× the
-# largest ordinary doc.  Detection is a JVM-side length() — no decode,
-# no Python.
-GIANT_BYTES = 100_000
+# --- whole-document input ---------------------------------------------------
 
 
 def _page_rows_of(url, blob) -> list[tuple]:
@@ -298,8 +287,7 @@ def _page_rows_of(url, blob) -> list[tuple]:
     that fails to decode is forwarded whole as its own page row — the
     paged pipeline's stage-A quarantine then flags it (nothing is
     dropped); a decodable zero-page payload gets one empty-marker page
-    row so the url stays alive through the paged pipeline.  Shared by
-    :func:`explode_pages` and ``extract_auto``'s router."""
+    row so the url stays alive through the paged pipeline."""
     blob = bytes(blob) if blob is not None else b""
     try:
         pages = decode_payload(blob)["pages"]
@@ -315,8 +303,9 @@ def _page_rows_of(url, blob) -> list[tuple]:
 
 
 def explode_pages(documents: DataFrame) -> DataFrame:
-    """(url, html) → one PAGED_SCHEMA row per page (see
-    :func:`_page_rows_of` for the quarantine contract)."""
+    """(url, html) → one PAGED_SCHEMA row per page: whole-doc input
+    reshaped for ``extract_paged`` (see :func:`_page_rows_of` for the
+    quarantine contract)."""
     src = documents.select("url", "html")
 
     def split(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -334,211 +323,11 @@ def explode_pages(documents: DataFrame) -> DataFrame:
     return src.mapInPandas(split, PAGED_SCHEMA)
 
 
-# marker value in ROUTED_SCHEMA.status for giant-doc page rows (never
-# collides with extract()'s 'ok'/'error'/'partial')
-_PAGE_STATUS = "__page__"
-
-ROUTED_SCHEMA = StructType(
-    EXTRACT_SCHEMA.fields + [
-        StructField("page_idx", IntegerType(), True),
-        StructField("page_html", BinaryType(), True),
-    ])
-
-
-def extract_auto(documents: DataFrame, min_q: int = 1, max_q: int = 50,
-                 giant_bytes: int = GIANT_BYTES,
-                 with_timing: bool = False,
-                 shard_chars: int | None = None,
-                 shard_spans: int | None = None) -> DataFrame:
-    """Size-routed extraction in a SINGLE source scan: one
-    ``mapInPandas`` router reads each document once — ordinary
-    documents are extracted in place (the zero-shuffle whole-doc path,
-    byte-identical by construction: same :func:`extract_one_row`);
-    documents above ``giant_bytes`` are exploded to page rows that
-    continue through ``extract_paged`` (page-parallel decode,
-    url-regrouped detect).  Output is byte-identical to ``extract()``
-    either way; routing only changes WHERE a document's work lands, so
-    one 1,000-page document cannot stall a task.
-
-    Scale note: the routed output is persisted (DISK_ONLY) so the two
-    consumers — finished rows and the giant-page branch — share ONE
-    materialization instead of re-scanning the source: the cache holds
-    extraction RESULTS plus the rare giant pages (a few percent of
-    input size at web scale), never the raw input table.  Only the
-    rare giant pages cross the wire in the spread shuffle, and AQE
-    coalesces the exchange when no giants exist.  DISK_ONLY is a
-    measured decision (round 8): a memory-tier cache of the full
-    output competing with 32 concurrent shuffle writers OOM'd an 8g
-    heap at 240k docs, while each block is consumed ~once right after
-    materialization — the memory tier bought nothing but heap risk.
-
-    **Cache lifetime (long-lived sessions)**: disk-backed blocks stay
-    until unpersisted (LRU eviction never reclaims them).  The
-    returned DataFrame
-    carries the handle as ``result._routed_cache``; once the result
-    has been fully consumed (written, collected), release it with
-    :func:`release_routed_cache` (or
-    ``result._routed_cache.unpersist()``).  ``run_extraction`` and the
-    CLI do this after their durable writes; any other caller that runs
-    many extractions in one session must do the same or accumulate
-    disk-backed cache blocks.
-
-    ``shard_chars`` (round-7 ask #1, opt-in): bound every OUTPUT row
-    under the ``core/shard.py`` rule — output gains
-    ``(shard_idx, n_shards)`` and rows above the thresholds split.
-    Applied on BOTH branches: the giant branch (where the measured
-    ~250 MB/slot write OOM lives) and the ordinary branch — a payload
-    small enough to dodge the ``giant_bytes`` router can still expand
-    to a giant output (zlib bombs), so the row-size guarantee must not
-    depend on the routing decision.  Byte identity holds under
-    :func:`reassemble_sharded`.
-
-    ``with_timing=True`` appends ``proc_us`` (matching
-    ``extract(with_timing=True)``, the manifest pipeline's per-bucket
-    metric source): measured per ordinary document in the router;
-    giant-routed documents report the router's explode time only
-    (their distributed page decode is not attributable to one task) —
-    a giant doc's ``proc_us`` therefore UNDERSTATES its true cost and
-    is NULL on the detect side, which the manifest sums treat as 0.
-    """
-    import time
-
-    from pyspark.sql import functions as F
-    from pyspark.storagelevel import StorageLevel
-
-    from .extract import extract_one_row
-
-    docs = documents.select("url", "html")
-    sharding = shard_chars is not None
-    if sharding and shard_spans is None:
-        shard_spans = DEFAULT_SHARD_SPANS
-    schema = ROUTED_SCHEMA
-    if sharding:
-        schema = StructType(
-            schema.fields + [StructField("shard_idx", IntegerType(), False),
-                             StructField("n_shards", IntegerType(), False)])
-    if with_timing:
-        from pyspark.sql.types import LongType
-        schema = StructType(
-            schema.fields + [StructField("proc_us", LongType())])
-    cols = [f.name for f in schema.fields]
-
-    # bounded emit: flush accumulated rows every CHUNK so one
-    # pathological 50k-page document never holds its full page-row
-    # set AND a same-size pandas copy in the worker at once — peak
-    # per-worker memory stays O(doc decode) + O(CHUNK), not O(pages)
-    chunk_rows = 4096
-
-    def _frame(rows: list[dict]) -> pd.DataFrame:
-        out = pd.DataFrame(rows, columns=cols)
-        # nullable Int32 so Arrow sees int32-with-nulls, not
-        # float64 (page_idx is None on every finished row)
-        out["page_idx"] = pd.array(out["page_idx"], dtype="Int32")
-        return out
-
-    def route(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for url, blob in zip(pdf["url"], pdf["html"]):
-                size = len(blob) if blob is not None else 0
-                t0 = time.perf_counter_ns()
-                if size <= giant_bytes:
-                    r = extract_one_row(url, blob, min_q, max_q)
-                    r["page_idx"] = None
-                    r["page_html"] = None
-                    proc = (time.perf_counter_ns() - t0) // 1000
-                    # sharding applies here too (zlib-bomb guard: a
-                    # small payload can expand to a giant output row);
-                    # proc_us lands on shard 0 only so the per-url sum
-                    # stays the document's actual time
-                    shards = (shard_row(r, shard_chars, shard_spans)
-                              if sharding else [r])
-                    for s in shards:
-                        if with_timing:
-                            s["proc_us"] = proc if s.get(
-                                "shard_idx", 0) == 0 else 0
-                        rows.append(s)
-                        if len(rows) >= chunk_rows:
-                            yield _frame(rows)
-                            rows = []
-                else:
-                    page_rows = _page_rows_of(url, blob)
-                    explode_us = (time.perf_counter_ns() - t0) // 1000
-                    for i, (u, idx, payload) in enumerate(page_rows):
-                        row = {
-                            "url": u, "extracted_text": None, "spans": [],
-                            "status": _PAGE_STATUS, "error": None,
-                            "page_idx": idx, "page_html": payload,
-                        }
-                        if sharding:
-                            # placeholder coordinates; the page rows are
-                            # dropped before extract_paged re-emits real
-                            # shard coordinates for the giant's output
-                            row["shard_idx"] = 0
-                            row["n_shards"] = 1
-                        if with_timing:
-                            # stamp the explode cost on the FIRST page
-                            # row only, so the per-url sum stays the
-                            # router's actual time
-                            row["proc_us"] = explode_us if i == 0 else 0
-                        rows.append(row)
-                        if len(rows) >= chunk_rows:
-                            yield _frame(rows)
-                            rows = []
-            if rows:
-                yield _frame(rows)
-
-    # DISK_ONLY, not MEMORY_AND_DISK (round-8 measured fix): the cache
-    # holds the ENTIRE extraction output, and letting it compete for
-    # the unified memory region against 32 concurrent shuffle-write
-    # tasks OOM'd the 8g heap at 240k docs (BENCH_SCALING.md
-    # §soak-under-defaults; 120k was green, so the failure scales with
-    # corpus size, not document shape).  Each cache block is read back
-    # ~once per consumer immediately after materialization, so the
-    # memory tier buys little; disk-backed blocks keep the heap for
-    # the shuffle and the run completed 240k at 8g in 39.6 s.
-    routed = docs.mapInPandas(route, schema).persist(
-        StorageLevel.DISK_ONLY)
-    done_cols = ([f.name for f in EXTRACT_SCHEMA.fields]
-                 + (["shard_idx", "n_shards"] if sharding else [])
-                 + (["proc_us"] if with_timing else []))
-    done = routed.filter(F.col("status") != _PAGE_STATUS).select(*done_cols)
-    # repartition AFTER the router: one giant doc's pages must spread
-    # across tasks (the whole point of the route); the shuffle moves
-    # only the rare giant payloads
-    giant_pages = routed.filter(F.col("status") == _PAGE_STATUS).select(
-        "url", "page_idx", "page_html").repartition("url", "page_idx")
-    giant_done = extract_paged(giant_pages, min_q, max_q,
-                               shard_chars=shard_chars,
-                               shard_spans=shard_spans)
-    if with_timing:
-        # the giant docs' router explode time, re-attached per url;
-        # the distributed decode/detect cost is deliberately NOT
-        # folded in (it belongs to many tasks, docstring note)
-        giant_us = (routed.filter(F.col("status") == _PAGE_STATUS)
-                    .groupBy("url").agg(F.sum("proc_us").alias("proc_us")))
-        giant_done = giant_done.join(giant_us, "url", "left")
-        if sharding:
-            # the join stamps every shard of a giant url — keep it on
-            # shard 0 only so per-url cpu sums don't scale with n_shards
-            giant_done = giant_done.withColumn(
-                "proc_us", F.when(F.col("shard_idx") == 0,
-                                  F.col("proc_us")).otherwise(F.lit(0)))
-    result = done.unionByName(giant_done)
-    # cache-lifetime handle: long-lived sessions should release the
-    # routed materialization once the result has been consumed —
-    # result._routed_cache.unpersist() (run_extraction does this after
-    # its durable write) — rather than clearCache()ing everything
-    result._routed_cache = routed
-    return result
+# ``extract()`` extracts giants in place (see its docstring); this is
+# the name callers written against the size-routed design import.
+extract_auto = extract
 
 
 def release_routed_cache(result: DataFrame) -> None:
-    """Unpersist the routed materialization attached to an
-    :func:`extract_auto` result (no-op for plain ``extract`` output,
-    or if already released).  Call once the result has been consumed;
-    see the cache-lifetime note in :func:`extract_auto`."""
-    cache = getattr(result, "_routed_cache", None)
-    if cache is not None:
-        cache.unpersist()
-        result._routed_cache = None
+    """No-op: ``extract_auto`` no longer persists anything.  Kept so
+    callers written against the cached router keep working."""

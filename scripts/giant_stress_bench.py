@@ -1,29 +1,31 @@
 """Pathological giant-document stress (round-6 verdict ask #4): one
 ~50k-page document planted among ordinary docs, run through the
-durable pipeline with ``route_giants=True`` under the capped 8g JVM
-heap, asserting
+durable pipeline with engine defaults under the capped 8g JVM heap,
+asserting
 
-  * byte identity — the routed giant's extracted_text/spans equal the
-    whole-doc ``extract()`` of the same payload;
+  * byte identity — the giant's extracted_text/spans, reassembled
+    from its shard rows, equal ``extract()`` of the same payload;
+  * bounded rows — the giant comes out as ``n_shards > 1`` rows, each
+    inside the shard bound;
   * no OOM — the run completes; per-process peak RSS of every Python
-    worker is sampled from /proc and reported;
-  * the page-parallel path engages — the router's cache holds exactly
-    n_pages ``__page__`` rows for the giant.
+    worker is sampled from /proc and reported.
 
 Usage: python scripts/giant_stress_bench.py [n_pages] [n_docs] [--no-shard]
 
-Since round 8 the DEFAULT mode passes NO routing/sharding knobs at all
-— ``run_extraction`` defaults are the safe ones (route on, shard at
-the core/shard.py threshold), so this script now certifies that a
+Since round 8 the DEFAULT mode passes NO sharding knobs at all —
+``run_extraction`` defaults are the safe ones (shard at the
+core/shard.py threshold), so this script certifies that a
 caller who remembered nothing survives the 50k-page giant at the exact
 config that OOM'd unsharded (8g heap × local[32], ~250 MB/slot), byte
 identity asserted through the shard reassembly rule.  ``--no-shard``
-keeps routing but disables row sharding (``shard_chars=None`` — the
-round-7 opt-out shape, retained for A/B continuity; it needs a heap
-that can absorb the giant's single output row).  ``--shard`` is
+disables row sharding (``shard_chars=None`` — the round-7 opt-out
+shape, retained for A/B continuity; it needs a heap that can absorb
+the giant's single output row).  ``--shard`` is
 accepted as a no-op for continuity with round-7 invocations.
 
-Prints one JSON line; results recorded in BENCH_SCALING.md.
+Scratch data (the cached ordinary corpus and the run's output) goes
+under the system temp dir (``TMPDIR``).  Prints one JSON line; results
+recorded in BENCH_SCALING.md.
 """
 
 from __future__ import annotations
@@ -32,13 +34,15 @@ import json
 import os
 import shutil
 import sys
+import tempfile
 import threading
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-CORPUS_DIR = "/tmp/scaling_corpus"          # shared with scaling_bench
-OUT_DIR = "/tmp/giant_stress_out"
+# shared with scaling_bench when TMPDIR is unset
+CORPUS_DIR = os.path.join(tempfile.gettempdir(), "scaling_corpus")
+OUT_DIR = os.path.join(tempfile.gettempdir(), "giant_stress_out")
 
 
 class RssMonitor(threading.Thread):
@@ -111,9 +115,6 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     from exam_pdf_parser_spark.operators.extract import corpus_df, extract
-    from exam_pdf_parser_spark.operators.extract_paged import (
-        _PAGE_STATUS, extract_auto, release_routed_cache,
-    )
     from exam_pdf_parser_spark.session import get_spark
     from exam_pdf_parser_spark.sources.manifest import run_extraction
 
@@ -136,7 +137,7 @@ def main() -> None:
                       shuffle_partitions=int(cpus))
     url_g, html_g = build_giant(n_pages)
     giant_mb = len(html_g) / 1e6
-    # decoded working-set estimate: the router holds the parsed JSON
+    # decoded working-set estimate: the emitter holds the parsed JSON
     decoded_mb = len(
         __import__("zlib").decompress(html_g[5:])) / 1e6 \
         if html_g[:5] == b"XLAY1" else float("nan")
@@ -153,16 +154,6 @@ def main() -> None:
         [(url_g, bytearray(html_g)),
          ("https://bad.example/x", bytearray(b"garbage payload"))],
         "url string, html binary"))
-
-    # engagement check: the router explodes the giant to exactly
-    # n_pages page rows (no silent whole-doc fallback)
-    gdf = spark.createDataFrame(
-        [(url_g, bytearray(html_g))], "url string, html binary")
-    routed = extract_auto(gdf)
-    n_page_rows = routed._routed_cache.filter(
-        F.col("status") == _PAGE_STATUS).count()
-    release_routed_cache(routed)
-    assert n_page_rows == n_pages, (n_page_rows, n_pages)
 
     mon = RssMonitor()
     mon.start()
@@ -206,12 +197,14 @@ def main() -> None:
         return [tuple(s.values()) if isinstance(s, dict) else tuple(s)
                 for s in spans]
 
+    gdf = spark.createDataFrame(
+        [(url_g, bytearray(html_g))], "url string, html binary")
     ref = extract(gdf).collect()[0]
     got = giant_row[0]
     identical = (ref["extracted_text"] == got["extracted_text"]
                  and span_tuples(ref["spans"])
                  == span_tuples(got["spans"]))
-    assert identical, "routed giant diverged from whole-doc extract"
+    assert identical, "durable giant diverged from whole-doc extract"
 
     t0 = time.perf_counter()
     s2 = run_extraction(spark, mixed, OUT_DIR, "giant-resume",
@@ -231,7 +224,6 @@ def main() -> None:
         "wall_sec": round(wall, 1),
         "docs_per_sec": round((n_docs + 2) / wall, 1),
         "resume_noop_sec": round(resume, 1),
-        "route_page_rows": n_page_rows,
         "byte_identical": identical,
         "giant_spans": len(got["spans"]),
         "max_worker_rss_mb": round(mon.max_single_kb / 1024, 1),

@@ -170,3 +170,21 @@ def test_host_state_grades_against_committed_bands():
     assert marginal["verdict"] == "marginal"
     un = bench._host_state(1.0, 1.0, 1.0, calibrated=False, bands_doc=doc)
     assert un["verdict"] == "uncalibrated"
+
+
+def test_oracle_sql_renders_identically_across_hash_seeds():
+    """Every SQL text the driver grades must render byte-identically in
+    any interpreter.  A set interpolated in iteration order (as
+    x_exam_info once did with ``WRITTEN_TYPES``) renders a different
+    text per ``PYTHONHASHSEED``; seeds 1 and 2 differed that way."""
+    import subprocess
+    import sys
+
+    code = ("import json, sys, __spark_entry__ as e; "
+            "sys.stdout.write(json.dumps(e.oracle_sql(), sort_keys=True))")
+    outs = [subprocess.run([sys.executable, "-c", code], cwd=REPO,
+                           env=dict(os.environ, PYTHONHASHSEED=seed),
+                           capture_output=True, check=True).stdout
+            for seed in ("1", "2")]
+    assert len(json.loads(outs[0])) == 50
+    assert outs[0] == outs[1]

@@ -79,7 +79,7 @@ def test_extract_auto_routes_and_matches_whole_doc(spark):
     )
 
     url_g, html_g = _giant_doc()
-    assert len(html_g) > GIANT_BYTES          # really routes
+    assert len(html_g) > GIANT_BYTES          # really a giant
     docs = corpus_df(spark, 10, partitions=2).select("url", "html")
     mixed = docs.unionByName(
         spark.createDataFrame([(url_g, html_g), ("https://bad.example/x",
@@ -95,54 +95,36 @@ def test_extract_auto_routes_and_matches_whole_doc(spark):
         assert g["extracted_text"] == w["extracted_text"], url
         assert [s.asDict() for s in g["spans"]] == \
                [s.asDict() for s in w["spans"]], url
-    # the giant doc decoded through the paged branch
+    # the giant doc extracted in place
     assert got[url_g]["status"] == "ok"
     assert len(got[url_g]["spans"]) > 0
-    # corrupt payloads still quarantine (small branch)
+    # corrupt payloads still quarantine
     assert got["https://bad.example/x"]["status"] == "error"
 
 
-def test_extract_auto_plan_shows_routed_union(spark):
+def test_extract_auto_plan_is_zero_shuffle(spark):
+    """The durable path's extraction, called as ``run_extraction`` calls
+    it (timing on, default sharding), is one MapInArrow over the scan:
+    no Exchange and no cached relation before the bucket write — the
+    ``x_extract_spans`` zero-shuffle pin (test_plan_shapes.py) extended
+    to the default path."""
+    from exam_pdf_parser_spark.core.shard import DEFAULT_SHARD_CHARS
     from exam_pdf_parser_spark.operators.extract_paged import extract_auto
 
     docs = corpus_df(spark, 5, partitions=2)
-    plan = extract_auto(docs)._jdf.queryExecution().executedPlan().toString()
-    assert "Union" in plan
-    # paged branch present (url-regrouped applyInPandas)...
-    assert "FlatMapGroupsInPandas" in plan
-    # ...with exactly its two giant-side shuffles (page spread + url
-    # regroup); the ordinary branch contributes none
-    assert plan.count("Exchange hashpartitioning") == 2
-    # single-scan routing: BOTH branches read the one cached router
-    # output (InMemoryTableScan), never the source twice
-    assert plan.count("InMemoryTableScan") == 2
-    seg = plan.split("Union", 1)[1]          # Union's first child = small
-    assert "Exchange" not in seg[:seg.index("InMemoryTableScan")]
-
-
-def test_extract_auto_cache_is_disk_only(spark):
-    """Round-8 measured fix: the routed cache holds the ENTIRE
-    extraction output — a memory-tier level competing with 32
-    concurrent shuffle writers OOM'd an 8g heap at 240k docs while a
-    disk-only cache ran green (BENCH_SCALING.md §soak-under-defaults).
-    Pin the level so a convenience revert can't reintroduce the OOM."""
-    from pyspark.storagelevel import StorageLevel
-
-    from exam_pdf_parser_spark.operators.extract_paged import (
-        extract_auto, release_routed_cache,
-    )
-
-    docs = corpus_df(spark, 3, partitions=1)
-    result = extract_auto(docs)
-    assert result._routed_cache.storageLevel == StorageLevel.DISK_ONLY
-    release_routed_cache(result)
+    plan = extract_auto(docs, with_timing=True,
+                        shard_chars=DEFAULT_SHARD_CHARS
+                        )._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan
+    assert "InMemoryTableScan" not in plan
+    assert "MapInArrow" in plan
 
 
 def test_extract_auto_reads_source_once(spark):
-    """Round-4 ask: the router must scan the input a single time.  An
+    """Round-4 ask: extraction must scan the input a single time.  An
     accumulator on an instrumented SOURCE counts rows actually read:
-    the old two-filter routing read every doc twice; the cached router
-    output must read each exactly once."""
+    the old two-filter routing read every doc twice; the one emitter
+    must read each exactly once, giant included."""
     import pandas as pd
 
     from exam_pdf_parser_spark.operators.extract_paged import (

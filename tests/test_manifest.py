@@ -711,8 +711,7 @@ def test_read_extracted_lowering_logged_and_restorable(
     """r8 ADVICE: the sticky session-conf lowering announces itself
     (one INFO line naming the conf and the way back) and
     restore_reader_batch gives mixed-workload sessions the wide
-    default back — symmetric to release_routed_cache on the cache
-    side."""
+    default back."""
     import logging
 
     from exam_pdf_parser_spark.sources.manifest import (

@@ -206,6 +206,34 @@ def test_run_extraction_sharded_manifest(spark, tmp_path):
     assert s2["buckets_processed"] == 0            # resume no-op
 
 
+def test_run_extraction_giant_proc_us_is_kernel_time(spark, tmp_path):
+    """A sharded giant through default ``run_extraction``: its kernel
+    time lands on shard 0 (``proc_us > 0``), every other shard carries
+    0, and its bucket's manifest ``cpu_ms`` covers it."""
+    from pyspark.sql import functions as F
+
+    from exam_pdf_parser_spark.sources.manifest import run_extraction
+
+    url_g, html_g = _giant_doc()
+    docs = corpus_df(spark, 2, partitions=1).select("url", "html") \
+        .unionByName(spark.createDataFrame(
+            [(url_g, html_g)], "url string, html binary"))
+    out = str(tmp_path / "giant_timing")
+    run_extraction(spark, docs, out, "t", n_buckets=4,
+                   shard_chars=SHARD_CHARS)
+    g = sorted(spark.read.parquet(f"{out}/extracted")
+               .filter(F.col("url") == url_g)
+               .select("shard_idx", "n_shards", "proc_us", "bucket")
+               .collect(), key=lambda r: r["shard_idx"])
+    assert len(g) == g[0]["n_shards"] > 1
+    assert g[0]["shard_idx"] == 0 and g[0]["proc_us"] > 0
+    assert all(r["proc_us"] == 0 for r in g[1:])
+    cpu_ms = (spark.read.parquet(f"{out}/manifest")
+              .filter(F.col("bucket") == g[0]["bucket"])
+              .first()["cpu_ms"])
+    assert cpu_ms >= g[0]["proc_us"] // 1000
+
+
 def test_shard_chars_requires_route_giants(spark, tmp_path):
     """Since the round-8 default flip, the conflict needs BOTH knobs
     explicit: routing turned off plus a shard threshold."""
